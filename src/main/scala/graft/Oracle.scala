@@ -106,9 +106,12 @@ object Oracle {
     }.mkString
   }
 
-  /** Ruby String#capitalize: first char up, rest down. */
+  /** Ruby String#capitalize: first code point up, rest down. */
   def capitalize(s: String): String =
     if (s.isEmpty) s
-    else s.substring(0, 1).toUpperCase(java.util.Locale.ROOT) +
-      s.substring(1).toLowerCase(java.util.Locale.ROOT)
+    else {
+      val head = Character.charCount(s.codePointAt(0))
+      s.substring(0, head).toUpperCase(java.util.Locale.ROOT) +
+        s.substring(head).toLowerCase(java.util.Locale.ROOT)
+    }
 }

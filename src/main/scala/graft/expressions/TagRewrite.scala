@@ -43,6 +43,40 @@ final case class FusedRule(
   * row, and the winning rule's template rendered directly from the live
   * `Matcher` — zero redundant regex executions.
   *
+  * Result cache. The cascade is a pure function of the row's values (tag
+  * plus every rule key), and routing keys have low cardinality in practice
+  * (a handful of source tags, a few hosts). So each thread keeps a
+  * direct-mapped cache of [[CompiledRuleTable.Slots]] entries keyed on the
+  * raw UTF-8 bytes of the values:
+  *  - a hit hashes the bytes (`UTF8String.hashCode`), compares them
+  *    (`equals`) and returns the cached immutable result — no decode, no
+  *    regex, no allocation. A null value keys like "" (the cascade cannot
+  *    tell them apart);
+  *  - a miss runs the cascade and stores COPIES of the values
+  *    (`UTF8String.copy`). Vectorized readers hand out UTF8Strings over
+  *    reused buffers, so an incoming object is never retained;
+  *  - an entry whose key bytes plus rendered-tag bytes exceed
+  *    [[CompiledRuleTable.MaxEntryBytes]] is not stored. Per-thread payload
+  *    is therefore at most `Slots × MaxEntryBytes` = 512 KiB, plus object
+  *    overhead of about `Slots × (64 × #values + 128)` bytes (256 KiB for
+  *    a table keyed on one column besides the tag).
+  *
+  * High-cardinality bypass. Keys that never repeat (one per log line) must
+  * not pay for copies into a table that never hits. The first
+  * [[CompiledRuleTable.ProbeMisses]] misses of a thread are a probe: if
+  * fewer than [[CompiledRuleTable.MinDistinctHits]] distinct-row hits came
+  * with them, the cache shrinks to its most recent entry for the rest of
+  * the thread's life (in practice one task: the table is deserialized with
+  * each task). The one entry remains because Catalyst may evaluate this
+  * expression several times per row — predicate pushdown inlines the struct
+  * into the drop filter (up to 3 textual copies) and the projection
+  * evaluates it again; FilterExec codegen does not eliminate common
+  * subexpressions across those. The duplicates run back-to-back on the same
+  * thread for the same row, so they hit the most recent entry. For the
+  * same reason a hit on the slot the previous call used is not counted as a
+  * distinct-row hit: counting those repeats would keep the cache on for
+  * keys that never repeat across rows.
+  *
   * Semantics are byte-identical to the Column path (asserted by the
   * differential spec): empty-value skip for normal rules
   * (out_rewrite_tag_filter.rb:120), invert without backrefs (:122-124),
@@ -63,6 +97,7 @@ final case class CompiledRuleTable(
     hostname: String,
     stripRegex: String) // null = no strip
     extends Serializable {
+  import CompiledRuleTable._
 
   @transient private lazy val patterns: Array[Pattern] =
     rules.map(r => Pattern.compile(r.pattern))
@@ -71,57 +106,117 @@ final case class CompiledRuleTable(
   @transient private lazy val labelsU8: Array[UTF8String] =
     rules.map(r => if (r.label == null) null else UTF8String.fromString(r.label))
 
-  /** Per-thread mutable state: one reusable Matcher per rule (+ strip) and a
-    * shared StringBuilder. Matchers are not thread-safe; expression instances
+  /** Per-thread mutable state: one reusable Matcher per rule (+ strip), a
+    * shared StringBuilder, the decoded values of the row being cascaded, and
+    * the result cache. Matchers are not thread-safe; expression instances
     * inside a codegen'd plan can be shared across tasks, hence ThreadLocal.
+    *
+    * Cache layout: slot `s` holds the values `keys(s*n until (s+1)*n)` and
+    * `results(s)` (which may be null: no rule fired); `keys(s*n) == null`
+    * marks an empty slot. `mask` is `Slots - 1`, or 0 once bypassed.
     */
-  private final class State(nVals: Int) {
+  private final class State(n: Int) {
     val matchers: Array[Matcher] = patterns.map(_.matcher(""))
     val strip: Matcher = if (stripPattern == null) null else stripPattern.matcher("")
     val sb = new java.lang.StringBuilder(64)
-    // last-row memo: Catalyst may evaluate this expression several times per
-    // row (predicate pushdown inlines the struct into the drop filter — up
-    // to 3 textual copies — and the projection evaluates it again; FilterExec
-    // codegen does not common-subexpression-eliminate across those). The
-    // duplicate evaluations happen back-to-back on the same thread for the
-    // same row, so a one-row cache keyed on the (immutable) String
-    // conversions turns them into memcmp hits. Keying on Strings — not the
-    // incoming UTF8Strings — matters: vectorized readers hand out
-    // UTF8Strings backed by reused buffers, so object/byte identity of a
-    // *stale* UTF8String is not a safe cache key.
-    val lastVals: Array[String] = new Array[String](nVals)
-    var lastResult: InternalRow = _
-    var hasLast: Boolean = false
+    val strs: Array[String] = new Array[String](n)
+    var mask: Int = Slots - 1
+    var keys: Array[UTF8String] = new Array[UTF8String](Slots * n)
+    var results: Array[InternalRow] = new Array[InternalRow](Slots)
+    var lastSlot: Int = -1 // slot of the previous call; -1 = not cached
+    var misses: Int = 0 // counted during the probe only
+    var distinctHits: Int = 0
   }
   @transient private lazy val local: ThreadLocal[State] = new ThreadLocal[State]
 
+  private def state(n: Int): State = {
+    var st = local.get()
+    if (st == null) { st = new State(n); local.set(st) }
+    st
+  }
+
   /** values(0) = tag column ("" for null), values(i>0) = rule key columns.
     * Returns `InternalRow(new_tag, new_label)` or null when no rule fires —
-    * exactly the reference's `(nil, nil)` fall-through (:136).
+    * exactly the reference's `(nil, nil)` fall-through (:136). Never
+    * retains `values` or its elements.
     */
   def rewrite(values: Array[UTF8String]): InternalRow = {
-    var st = local.get()
-    if (st == null) { st = new State(values.length); local.set(st) }
+    val n = values.length
+    val st = state(n)
+    val slot = if (st.mask == 0) 0 else slotHash(values) & st.mask
+    val base = slot * n
+    if (st.keys(base) != null && sameKeys(st.keys, base, values)) {
+      if (slot != st.lastSlot) {
+        st.lastSlot = slot
+        if (st.misses < ProbeMisses) st.distinctHits += 1
+      }
+      return st.results(slot)
+    }
 
-    // convert once, then memo-check (Strings are immutable; UTF8Strings are
-    // not safe to retain across rows — see State.lastVals)
-    var same = st.hasLast
+    var bytes = 0
     var i = 0
-    while (i < values.length) {
-      val s = if (values(i) == null) "" else values(i).toString
-      if (same && st.lastVals(i) != s) same = false
-      st.lastVals(i) = s
+    while (i < n) {
+      val v = values(i)
+      if (v == null) st.strs(i) = ""
+      else { st.strs(i) = v.toString; bytes += v.numBytes }
       i += 1
     }
-    if (same) return st.lastResult
-    st.hasLast = true
     val r = rewriteUncached(st)
-    st.lastResult = r
+    if (r != null && (r ne FiredDropped)) bytes += r.getUTF8String(0).numBytes
+    if (bytes <= MaxEntryBytes) {
+      i = 0
+      while (i < n) {
+        val v = values(i)
+        st.keys(base + i) =
+          if (v == null || v.numBytes == 0) UTF8String.EMPTY_UTF8 else v.copy()
+        i += 1
+      }
+      st.results(slot) = r
+      st.lastSlot = slot
+    } else st.lastSlot = -1
+    if (st.misses < ProbeMisses) {
+      st.misses += 1
+      if (st.misses == ProbeMisses && st.distinctHits < MinDistinctHits)
+        shrinkToLast(st, n)
+    }
     r
   }
 
+  /** Bypass: keep only the most recent entry, in slot 0. */
+  private def shrinkToLast(st: State, n: Int): Unit = {
+    val keys = new Array[UTF8String](n)
+    val results = new Array[InternalRow](1)
+    if (st.lastSlot >= 0) {
+      System.arraycopy(st.keys, st.lastSlot * n, keys, 0, n)
+      results(0) = st.results(st.lastSlot)
+      st.lastSlot = 0
+    }
+    st.keys = keys
+    st.results = results
+    st.mask = 0
+  }
+
+  /** The calling thread's cache, for tests. */
+  private[expressions] def cacheStats(n: Int): CacheStats = {
+    val st = state(n)
+    var entries = 0
+    var payload = 0L
+    var s = 0
+    while (s <= st.mask) {
+      if (st.keys(s * n) != null) {
+        entries += 1
+        var i = 0
+        while (i < n) { payload += st.keys(s * n + i).numBytes; i += 1 }
+        val r = st.results(s)
+        if (r != null && (r ne FiredDropped)) payload += r.getUTF8String(0).numBytes
+      }
+      s += 1
+    }
+    CacheStats(st.mask + 1, entries, payload, st.misses, st.distinctHits)
+  }
+
   private def rewriteUncached(st: State): InternalRow = {
-    val tag = st.lastVals(0)
+    val tag = st.strs(0)
     // lazily materialized per row
     var stripped: String = null
     var parts: Array[String] = null
@@ -140,7 +235,7 @@ final case class CompiledRuleTable(
     var i = 0
     while (i < rules.length) {
       val rule = rules(i)
-      val v = st.lastVals(rule.keyIdx)
+      val v = st.strs(rule.keyIdx)
       val fired =
         if (rule.invert)
           // inverted rules evaluate even on "" and never substitute backrefs
@@ -202,6 +297,50 @@ final case class CompiledRuleTable(
 object CompiledRuleTable {
   /** Shared "rule fired, row dropped" result — immutable, consumers copy. */
   val FiredDropped: InternalRow = new GenericInternalRow(Array[Any](null, null))
+
+  /** Result-cache slots per thread (a power of two). */
+  final val Slots = 1024
+  /** Largest cached entry: key bytes plus rendered-tag bytes. */
+  final val MaxEntryBytes = 512
+  /** Misses in the probe that decides whether a thread bypasses the cache. */
+  final val ProbeMisses = 4096
+  /** Distinct-row hits the probe needs for the cache to stay on. */
+  final val MinDistinctHits = 4096
+
+  /** Slot hash over the values' bytes; null hashes like "". */
+  private[expressions] def slotHash(values: Array[UTF8String]): Int = {
+    var h = 0
+    var i = 0
+    while (i < values.length) {
+      val v = values(i)
+      h = 31 * h + (if (v == null) UTF8String.EMPTY_UTF8 else v).hashCode
+      i += 1
+    }
+    h ^ (h >>> 16)
+  }
+
+  /** Does slot `base` hold `values`? null matches "". */
+  private def sameKeys(keys: Array[UTF8String], base: Int,
+      values: Array[UTF8String]): Boolean = {
+    var i = 0
+    while (i < values.length) {
+      val v = values(i)
+      val k = keys(base + i)
+      if (if (v == null) k.numBytes != 0 else !k.equals(v)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Snapshot of one thread's cache: `slots` is 1 once bypassed. */
+  private[expressions] final case class CacheStats(
+      slots: Int,
+      entries: Int,
+      payloadBytes: Long,
+      misses: Int,
+      distinctHits: Int) {
+    def bypassed: Boolean = slots == 1
+  }
 }
 
 /** Whole-cascade rule rewrite as ONE codegen'd Catalyst expression.
@@ -241,7 +380,9 @@ case class TagRewriteExpr(children: Seq[Expression], table: CompiledRuleTable)
     val evals = children.map(_.genCode(ctx))
     val u8 = "org.apache.spark.unsafe.types.UTF8String"
     val rowCls = "org.apache.spark.sql.catalyst.InternalRow"
-    val vals = ctx.freshName("vals")
+    // one array per generated class: `rewrite` never retains it
+    val vals = ctx.addMutableState(s"$u8[]", "vals",
+      v => s"$v = new $u8[${children.length}];", forceInline = true)
     val childCode = evals.map(_.code).reduce(_ + _)
     val assigns = evals.zipWithIndex.map { case (e, i) =>
       s"$vals[$i] = ${e.isNull} ? null : ${e.value};"
@@ -249,7 +390,6 @@ case class TagRewriteExpr(children: Seq[Expression], table: CompiledRuleTable)
     ev.copy(code =
       code"""
         |$childCode
-        |$u8[] $vals = new $u8[${children.length}];
         |$assigns
         |$rowCls ${ev.value} = $tableRef.rewrite($vals);
         |boolean ${ev.isNull} = ${ev.value} == null;
@@ -269,13 +409,15 @@ object TagRewriteExpr {
     */
   def splitDots(s: String): Array[String] = s.split("\\.", -1)
 
-  /** Ruby `String#capitalize` (:150): upcase first char, downcase the rest —
-    * identical to the Column path's upper(substring(c,1,1))+lower(rest).
+  /** Ruby `String#capitalize` (:150): upcase the first code point, downcase
+    * the rest — identical to the Column path's upper(substring(c,1,1)) +
+    * lower(rest), whose substring counts code points, not UTF-16 units.
     */
   def appendCapitalized(sb: java.lang.StringBuilder, s: String): Unit = {
     if (s.nonEmpty) {
-      sb.append(s.substring(0, 1).toUpperCase(Locale.ROOT))
-      sb.append(s.substring(1).toLowerCase(Locale.ROOT))
+      val head = Character.charCount(s.codePointAt(0))
+      sb.append(s.substring(0, head).toUpperCase(Locale.ROOT))
+      sb.append(s.substring(head).toLowerCase(Locale.ROOT))
     }
   }
 }

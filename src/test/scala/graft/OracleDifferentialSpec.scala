@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -68,53 +68,83 @@ class OracleDifferentialSpec extends AnyFunSuite {
   private def sample[T](g: Gen[T], seed: Long): T =
     g.pureApply(Gen.Parameters.default, Seed(seed))
 
-  test("engine ≡ scalar oracle on randomized rules × configs × records") {
-    val schema = StructType(
-      StructField("rid", IntegerType, nullable = false) +:
-        cols.map(c => StructField(c, StringType, nullable = true)) :+
-        StructField("source", StringType, nullable = false))
+  private val schema = StructType(
+    StructField("rid", IntegerType, nullable = false) +:
+      cols.map(c => StructField(c, StringType, nullable = true)) :+
+      StructField("source", StringType, nullable = false))
 
+  private type Rec = (Seq[Option[String]], String)
+
+  /** Route `recs` (rid = position) through `df` with both compilations and
+    * assert each equals the scalar oracle.
+    */
+  private def assertAgrees(ctx: String, rules: List[Rule], cfg: RoutingConfig,
+      recs: Seq[Rec], df: DataFrame): Unit = {
+    def collectRouted(plan: RuleCompiler.RoutingPlan) =
+      Router.route(df, plan).collect().map { r =>
+        r.getAs[Int]("rid") ->
+          (r.getAs[String]("new_tag"), Option(r.getAs[String]("new_label")))
+      }.toMap
+    val got = collectRouted(RuleCompiler.compile(rules, cfg, schema, "source"))
+    val gotFused =
+      collectRouted(RuleCompiler.compileFused(rules, cfg, schema, "source"))
+    val want = recs.zipWithIndex.flatMap { case ((vals, tag), i) =>
+      val record: Map[String, Any] =
+        cols.zip(vals).collect { case (c, Some(v)) => c -> v }.toMap
+      Oracle.route(rules, cfg, tag, record).map(i -> _)
+    }.toMap
+    assert(got == want,
+      s"\n$ctx\nrules=$rules\ncfg=$cfg\nmismatch=${
+        recs.zipWithIndex.filter(p => got.get(p._2) != want.get(p._2)).take(20)}")
+    // fused single-expression cascade ≡ Column cascade ≡ scalar oracle
+    assert(gotFused == want,
+      s"\n[fused] $ctx\nrules=$rules\ncfg=$cfg\nmismatch=${
+        recs.zipWithIndex.filter(p => gotFused.get(p._2) != want.get(p._2)).take(20)}")
+  }
+
+  private def frameOf(recs: Seq[Rec]): DataFrame = {
+    val rows = recs.zipWithIndex.map { case ((vals, tag), i) =>
+      Row.fromSeq(i +: vals.map(_.orNull) :+ tag)
+    }
+    spark.createDataFrame(
+      new java.util.ArrayList[Row](
+        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
+  }
+
+  test("engine ≡ scalar oracle on randomized rules × configs × records") {
     for (iter <- 0 until 15) {
       val rules = sample(genRules, 1000 + iter)
       val cfg = sample(genConfig, 2000 + iter)
       val recs = sample(Gen.listOfN(25, Gen.zip(genRecord, genTag)), 3000 + iter)
-      val rows = recs.zipWithIndex.map { case ((vals, tag), i) =>
-        Row.fromSeq(i +: vals.map(_.orNull) :+ tag)
-      }
-      val df = spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-      def collectRouted(plan: RuleCompiler.RoutingPlan) =
-        Router.route(df, plan).collect().map { r =>
-          r.getAs[Int]("rid") ->
-            (r.getAs[String]("new_tag"), Option(r.getAs[String]("new_label")))
-        }.toMap
-      val got = collectRouted(RuleCompiler.compile(rules, cfg, schema, "source"))
-      val gotFused =
-        collectRouted(RuleCompiler.compileFused(rules, cfg, schema, "source"))
-      val want = recs.zipWithIndex.flatMap { case ((vals, tag), i) =>
-        val record: Map[String, Any] =
-          cols.zip(vals).collect { case (c, Some(v)) => c -> v }.toMap
-        Oracle.route(rules, cfg, tag, record).map(i -> _)
-      }.toMap
-      assert(got == want,
-        s"\niter=$iter\nrules=$rules\ncfg=$cfg\nmismatch=${
-          recs.zipWithIndex.filter(p => got.get(p._2) != want.get(p._2))}")
-      // fused single-expression cascade ≡ Column cascade ≡ scalar oracle
-      assert(gotFused == want,
-        s"\n[fused] iter=$iter\nrules=$rules\ncfg=$cfg\nmismatch=${
-          recs.zipWithIndex.filter(p => gotFused.get(p._2) != want.get(p._2))}")
+      assertAgrees(s"iter=$iter", rules, cfg, recs, frameOf(recs))
     }
+  }
+
+  test("engine ≡ scalar oracle across the fused cache's switch to bypass") {
+    import graft.expressions.CompiledRuleTable.ProbeMisses
+    // Unique tags make every row of the head distinct, so one task thread
+    // ends the cache's probe in bypass; the tail then repeats 25 records.
+    val head = sample(Gen.listOfN(ProbeMisses + 500, Gen.zip(genRecord, genTag)), 3100)
+      .zipWithIndex.map { case ((vals, tag), i) => (vals, s"$tag.u$i") }
+    val pool = sample(Gen.listOfN(25, Gen.zip(genRecord, genTag)), 3101)
+    val recs = head ++ (0 until 2000).map(i => pool(i * 7 % 25))
+    // one parquet file = one partition = one task, read by the vectorized
+    // reader (reused value buffers), as in production
+    val dir = java.nio.file.Files.createTempDirectory("diff-bypass").toString
+    try {
+      frameOf(recs).coalesce(1).write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir)
+      assert(df.rdd.getNumPartitions == 1)
+      for (iter <- 0 until 3)
+        assertAgrees(s"bypass iter=$iter", sample(genRules, 1100 + iter),
+          sample(genConfig, 2100 + iter), recs, df)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("prepending a never-matching rule changes nothing (first-match-wins)") {
     val rules = List(
       Rule("domain", "google", "g.$1.${tag_parts[1]}"),
       Rule("agent", ".+", "a.${tag}"))
-    val schema = StructType(
-      StructField("rid", IntegerType, nullable = false) +:
-        cols.map(c => StructField(c, StringType, nullable = true)) :+
-        StructField("source", StringType, nullable = false))
     val rows = (0 until 20).map(i =>
       Row.fromSeq(i +: Seq(if (i % 3 == 0) "www.google.com" else null,
         s"agent-$i", null, null) :+ "in.tag"))

@@ -318,6 +318,19 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(out(2)._1 == "site.ExampleMail") // "MAIL" → "Mail": rest is DOWNcased
   }
 
+  test("capitalize upcases the first code point, not half a surrogate pair") {
+    val rules = Seq(Rule("domain", "^(.+)$", "u.$1"))
+    val cfg = RoutingConfig(capitalizeRegexBackreference = true)
+    val value = "𐐨ABC" // U+10428 DESERET SMALL LONG I, then ABC
+    val df = frame(Seq("domain"), "input", Seq(Seq(value)))
+    val want = "u.𐐀abc" // U+10400, its capital
+    assert(Oracle.route(rules, cfg, "input", Map("domain" -> value)) ==
+      Some((want, None)))
+    assert(routedMap(df, rules, cfg)(0)._1 == want) // fused
+    val column = Router.route(df, RuleCompiler.compile(rules, cfg, df.schema, "source"))
+    assert(column.collect().map(_.getAs[String]("new_tag")).toSeq == Seq(want))
+  }
+
   // --- unknown placeholder / out-of-range behaviors -----------------------
   test("unknown placeholder and out-of-range backref/tag_parts → empty string") {
     val rules = Seq(
