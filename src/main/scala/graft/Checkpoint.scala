@@ -141,27 +141,33 @@ object Checkpoint {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** One `"key":count` entry; the key is a JSON string (escapes allowed). */
+  private val sinkEntry = """"((?:[^"\\]|\\.)*)":(-?[0-9]+)"""
+
   /** Parse our own manifests (flat string/number fields + sink_counts
-    * object) — no JSON library in the dependency budget.
+    * object) — no JSON library in the dependency budget. The sink_counts
+    * object is matched entry by entry, so a `}` or `"` inside a sink key
+    * cannot end it early, and scalar fields are read from the rest only.
     */
   private def readManifest(path: java.nio.file.Path): Option[Map[String, String]] = {
     if (!Files.exists(path)) return None
     val s = new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
     val fields = scala.collection.mutable.Map[String, String]()
-    val scalar = """"([a-z_]+)":(?:"((?:[^"\\]|\\.)*)"|(-?[0-9]+))""".r
-    for (m <- scalar.findAllMatchIn(s)) {
-      val v = Option(m.group(2)).getOrElse(m.group(3))
-      if (m.group(1) != "sink_counts") fields(m.group(1)) = v
+    val sinksRe = s""""sink_counts":(\\{(?:$sinkEntry,?)*\\})""".r
+    val rest = sinksRe.findFirstMatchIn(s) match {
+      case Some(m) =>
+        fields("sink_counts") = m.group(1)
+        s.substring(0, m.start) + s.substring(m.end)
+      case None => s
     }
-    val sinksRe = """"sink_counts":(\{[^}]*\})""".r
-    sinksRe.findFirstMatchIn(s).foreach(m => fields("sink_counts") = m.group(1))
+    val scalar = """"([a-z_]+)":(?:"((?:[^"\\]|\\.)*)"|(-?[0-9]+))""".r
+    for (m <- scalar.findAllMatchIn(rest))
+      fields(m.group(1)) = Option(m.group(2)).getOrElse(m.group(3))
     Some(fields.toMap)
   }
 
-  private def parseSinkCounts(json: String): Map[String, Long] = {
-    val entry = """"((?:[^"\\]|\\.)*)":(-?[0-9]+)""".r
-    entry.findAllMatchIn(json)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\") -> m.group(2).toLong)
+  private def parseSinkCounts(json: String): Map[String, Long] =
+    sinkEntry.r.findAllMatchIn(json)
+      .map(m => """\\(.)""".r.replaceAllIn(m.group(1), "$1") -> m.group(2).toLong)
       .toMap
-  }
 }

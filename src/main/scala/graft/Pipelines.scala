@@ -47,15 +47,9 @@ object Pipelines {
     ).toDF("tag", "sink_name", "team", "priority")
   }
 
-  /** Flagship uses the fused single-expression cascade (TagRewriteExpr) —
-    * one regex pass per row, reused matchers. The pure-Column compilation of
-    * the same rules is kept available for differential testing.
-    */
+  /** The flagship rules compiled over `df`'s schema. */
   def flagshipPlan(df: DataFrame): RoutingPlan =
     RuleCompiler.compileFused(flagshipRules, flagshipConfig, df.schema, "source")
-
-  def flagshipPlanColumns(df: DataFrame): RoutingPlan =
-    RuleCompiler.compile(flagshipRules, flagshipConfig, df.schema, "source")
 
   /** route → enrich; the full row-level frame (fan-out write path, where
     * every emitted row carries its sink attributes).

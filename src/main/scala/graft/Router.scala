@@ -2,14 +2,14 @@ package graft
 
 import graft.RuleCompiler.RoutingPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 
 /** The data path: apply a compiled [[RuleCompiler.RoutingPlan]] to a frame,
   * drop unrouted rows, optionally enrich via broadcast lookup, and fan out
   * to per-(label, tag) sinks with per-sink counts.
   *
   * Mirrors the reference's `process` (out_rewrite_tag_filter.rb:90-115) as a
-  * single narrow (map-side) pipeline: scan → case/when routing → filter.
+  * single narrow (map-side) pipeline: scan → fused rule cascade → filter.
   * The only shuffles in the whole flow are (a) the final count aggregation
   * and (b) an optional salted repartition before the fan-out write; the rule
   * cascade itself is embarrassingly parallel, exactly like the reference's
@@ -24,48 +24,18 @@ object Router {
     */
   val DefaultLabel = "@default"
 
-  /** Route without dropping: adds `new_tag` (nullable — null = no rule
-    * fired) and `new_label`. Exposed for metrics/differential tests.
-    */
-  def routeRaw(df: DataFrame, plan: RoutingPlan): DataFrame =
-    df.withColumn("__routed", plan.routed)
-      .withColumn(NewTag, col("__routed.tag"))
-      .withColumn(NewLabel, col("__routed.label"))
-      .drop("__routed")
-
   /** Full routing incl. the unchanged/unrouted drop filter
     * (out_rewrite_tag_filter.rb:96-100): drop when (no rule fired OR tag
     * unchanged) AND no label; a label keeps an unchanged tag alive
-    * (relabel); a fired rule always has a non-null tag, but a null one
-    * falls back to the original (:100).
-    *
-    * A fused-drop plan already encodes the decision (`tag = null` ⇔ drop),
-    * so the filter is one field access; the CaseWhen plan states the full
-    * predicate over the derived columns.
+    * (relabel). The plan's `routed` struct already encodes that decision
+    * (`tag = null` ⇔ drop), so the filter is one field access and predicate
+    * pushdown copies that access, not the cascade.
     */
-  def route(df: DataFrame, plan: RoutingPlan): DataFrame = {
-    if (plan.fusedDrop) {
-      df.withColumn("__routed", plan.routed)
-        .filter(col("__routed.tag").isNotNull)
-        .withColumn(NewTag, col("__routed.tag"))
-        .withColumn(NewLabel, col("__routed.label"))
-        .drop("__routed")
-    } else {
-      // null tag ≡ "" (Fluentd's missing-value convention; the fused path
-      // coalesces the same way, so both compilations stay byte-identical
-      // even on null tag columns)
-      val orig = coalesce(col(plan.tagCol).cast("string"), lit(""))
-      routeRaw(df, plan)
-        .filter((col(NewTag).isNotNull && col(NewTag) =!= orig) ||
-          col(NewLabel).isNotNull)
-        .withColumn(NewTag, coalesce(col(NewTag), orig))
-    }
-  }
+  def route(df: DataFrame, plan: RoutingPlan): DataFrame =
+    project(df.withColumn("__routed", plan.routed)
+      .filter(col("__routed.tag").isNotNull))
 
-  /** Convenience: compile + route. Uses the fused single-expression cascade
-    * (the engine's production path); `RuleCompiler.compile` remains for the
-    * pure-built-in Column plan, differentially tested against this one.
-    */
+  /** Convenience: compile + route. */
   def route(
       df: DataFrame,
       rules: Seq[Rule],
@@ -75,35 +45,24 @@ object Router {
 
   /** Routed-frame metrics via `observe` — emitted/matched/unmatched mirror
     * the reference's drop trace (:97) and the north star's counter triple.
-    * Attach BEFORE the drop filter so unmatched rows are still visible.
+    * Attached BEFORE the drop filter so unmatched rows are still visible:
+    * a null struct means no rule fired, `tag = null` means dropped.
     * Read back from a QueryExecutionListener or `Observation`.
     */
   def routeObserved(df: DataFrame, plan: RoutingPlan,
-      observation: org.apache.spark.sql.Observation): DataFrame = {
-    if (plan.fusedDrop) {
-      // null struct = no rule fired; struct(null,·) = fired but dropped
-      df.withColumn("__routed", plan.routed)
-        .observe(observation,
-          count(lit(1)).as("emitted"),
-          count(when(col("__routed").isNotNull, 1)).as("matched"),
-          count(when(col("__routed.tag").isNull, 1)).as("unmatched"))
-        .filter(col("__routed.tag").isNotNull)
-        .withColumn(NewTag, col("__routed.tag"))
-        .withColumn(NewLabel, col("__routed.label"))
-        .drop("__routed")
-    } else {
-      val orig = coalesce(col(plan.tagCol).cast("string"), lit(""))
-      val kept = (col(NewTag).isNotNull && col(NewTag) =!= orig) ||
-        col(NewLabel).isNotNull
-      routeRaw(df, plan)
-        .observe(observation,
-          count(lit(1)).as("emitted"),
-          count(when(col(NewTag).isNotNull || col(NewLabel).isNotNull, 1)).as("matched"),
-          count(when(!kept, 1)).as("unmatched"))
-        .filter(kept)
-        .withColumn(NewTag, coalesce(col(NewTag), orig))
-    }
-  }
+      observation: org.apache.spark.sql.Observation): DataFrame =
+    project(df.withColumn("__routed", plan.routed)
+      .observe(observation,
+        count(lit(1)).as("emitted"),
+        count(when(col("__routed").isNotNull, 1)).as("matched"),
+        count(when(col("__routed.tag").isNull, 1)).as("unmatched"))
+      .filter(col("__routed.tag").isNotNull))
+
+  /** `__routed` → `new_tag`, `new_label`. */
+  private def project(df: DataFrame): DataFrame =
+    df.withColumn(NewTag, col("__routed.tag"))
+      .withColumn(NewLabel, col("__routed.label"))
+      .drop("__routed")
 
   /** Broadcast lookup enrichment: left join a small tag-keyed dimension on
     * the rewritten tag (north star: "rewritten tags are materialized via

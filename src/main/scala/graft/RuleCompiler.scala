@@ -2,92 +2,34 @@ package graft
 
 import java.util.regex.{Pattern, PatternSyntaxException}
 
-import graft.TemplateParser._
-import graft.expressions.{CompiledRuleTable, FusedRule, RegexpReplaceFirst, TagRewriteExpr}
+import graft.expressions.{CompiledRuleTable, FusedRule, TagRewriteExpr}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
-/** Compiles an ordered rule table into a single Catalyst expression pair —
-  * the engine's "query compilation" step, mirroring the reference's
-  * `configure` (out_rewrite_tag_filter.rb:35-74) but emitting a vectorized,
-  * whole-stage-codegen'd `CASE WHEN` instead of an interpreted loop.
-  *
-  * First-match-wins (out_rewrite_tag_filter.rb:117-137) maps onto `CaseWhen`
-  * branch order; Catalyst never reorders CaseWhen branches, so rule order is
-  * preserved by construction. This is deliberately NOT a union of N filtered
-  * branches: that would re-scan per rule and break first-match semantics for
-  * rows matching several rules.
+/** Compiles an ordered rule table into one Catalyst expression — the
+  * engine's "query compilation" step, mirroring the reference's `configure`
+  * (out_rewrite_tag_filter.rb:35-74) but emitting a whole-stage-codegen'd
+  * [[TagRewriteExpr]] instead of an interpreted loop. The expression runs
+  * the first-match-wins cascade (:117-137) in rule order, so rule order is
+  * preserved by construction, and it decides the drop (:96-100) too.
   */
 object RuleCompiler {
 
-  /** Compiled plan. `routed` is a `struct(tag, label)` column — null when no
-    * rule fires. All rule constants are folded in as literals, so the plan
-    * ships to executors inside the serialized physical plan with no closure
-    * or broadcast state (the reference's multi-worker share-nothing model,
-    * out_rewrite_tag_filter.rb:76-78).
+  /** Compiled plan. `routed` is the fused `struct(tag, label)` column:
+    * a null struct when no rule fires, `struct(null, null)` when a rule
+    * fires but the row is dropped (tag unchanged, no label), otherwise the
+    * routed tag and label. All rule constants are folded into the
+    * expression, so the plan ships to executors inside the serialized
+    * physical plan with no closure or broadcast state (the reference's
+    * multi-worker share-nothing model, out_rewrite_tag_filter.rb:76-78).
     */
-  /** @param fusedDrop when true, `routed` already carries the
-    *                   unchanged/unrouted drop decision (fused expression:
-    *                   null struct = no rule fired, `tag = null` = fired but
-    *                   dropped); Router then filters on a field access
-    *                   instead of re-stating the drop predicate.
-    */
-  final case class RoutingPlan(
-      rules: Seq[Rule],
-      config: RoutingConfig,
-      tagCol: String,
-      routed: Column,
-      strippedTag: Column,
-      ruleVersionHash: String,
-      fusedDrop: Boolean = false)
+  final case class RoutingPlan(routed: Column, ruleVersionHash: String)
 
-  def compile(
-      rules: Seq[Rule],
-      cfg: RoutingConfig,
-      schema: StructType,
-      tagCol: String = "source"): RoutingPlan = {
-
-    validate(rules, cfg)
-
-    val stripped = strippedTagExpr(col(tagCol), cfg)
-
-    val branches = rules.map { rule =>
-      val v = KeyPath.resolve(rule.key, schema)
-      val pat = rule.normalizedPattern // accepts /re/ and bare forms (:24)
-      val groupCount =
-        try Pattern.compile(pat).matcher("").groupCount()
-        catch {
-          case e: PatternSyntaxException =>
-            throw new RuleConfigError(
-              s"rule pattern is not a valid Java regex: ${rule.pattern} (${e.getMessage})")
-        }
-      // Empty-value skip (R-EMPTY, :120): normal rules require a non-empty
-      // value; inverted rules evaluate even on "" (missing field included).
-      val cond =
-        if (rule.invert) !v.rlike(pat)
-        else length(v) > 0 && v.rlike(pat)
-      val tagExpr = renderTemplate(rule, pat, v, groupCount, stripped, cfg)
-      val labelExpr =
-        rule.label.map(lit).getOrElse(lit(null).cast(StringType))
-      (cond, struct(tagExpr.as("tag"), labelExpr.as("label")))
-    }
-
-    val routed = branches.tail
-      .foldLeft(when(branches.head._1, branches.head._2)) {
-        case (acc, (c, s)) => acc.when(c, s)
-      } // no .otherwise → null struct = no rule fired (:136)
-
-    RoutingPlan(rules, cfg, tagCol, routed, stripped, ruleVersionHash(rules, cfg))
-  }
-
-  /** Fused compilation: the whole cascade as ONE custom codegen'd Catalyst
-    * expression ([[TagRewriteExpr]]) instead of a CaseWhen over built-ins.
-    * Same semantics (differential-tested); chosen for the hot path because
-    * the built-in plan re-executes each rule's regex once per backref and
-    * allocates a Matcher + String per regex op per row — the measured
-    * scaling bottleneck at high core counts (see [[CompiledRuleTable]]).
+  /** The whole cascade as ONE custom codegen'd Catalyst expression
+    * ([[TagRewriteExpr]]): patterns compiled once per plan, one regex pass
+    * per row, reused matchers (see [[CompiledRuleTable]]).
     */
   def compileFused(
       rules: Seq[Rule],
@@ -100,16 +42,8 @@ object RuleCompiler {
     val keys = rules.map(_.key).distinct
     val keyIdx = keys.zipWithIndex.toMap
     val fused = rules.map { r =>
-      val pat = r.normalizedPattern
-      val groupCount =
-        try Pattern.compile(pat).matcher("").groupCount()
-        catch {
-          case e: PatternSyntaxException =>
-            throw new RuleConfigError(
-              s"rule pattern is not a valid Java regex: ${r.pattern} (${e.getMessage})")
-        }
-      FusedRule(keyIdx(r.key) + 1, pat, r.invert, r.label.orNull,
-        TemplateParser.parse(r.tag).toArray, groupCount)
+      FusedRule(keyIdx(r.key) + 1, r.normalizedPattern, r.invert, r.label.orNull,
+        TemplateParser.parse(r.tag).toArray, groupCount(r))
     }
     val stripRegex = (cfg.removeTagPrefix, cfg.removeTagRegexp) match {
       case (Some(p), _)  => "^" + Pattern.quote(p) + "\\.?"
@@ -124,75 +58,24 @@ object RuleCompiler {
         keys.map(k => ColumnBridge.expression(KeyPath.resolve(k, schema)))
     val routed = ColumnBridge.column(TagRewriteExpr(children, table))
 
-    RoutingPlan(rules, cfg, tagCol, routed, strippedTagExpr(col(tagCol), cfg),
-      ruleVersionHash(rules, cfg), fusedDrop = true)
+    RoutingPlan(routed, ruleVersionHash(rules, cfg))
   }
 
-  /** Tag stripped for placeholder purposes ONLY (:155-156); the drop check
-    * still compares the original tag. Ruby `sub` replaces the first match —
-    * hence [[RegexpReplaceFirst]], not the replace-all builtin.
+  /** Capture-group count of a rule's compiled pattern; an invalid Java regex
+    * is a config error at compile time, not a task failure.
     */
-  def strippedTagExpr(tag: Column, cfg: RoutingConfig): Column = {
-    val base = coalesce(tag.cast(StringType), lit(""))
-    (cfg.removeTagPrefix, cfg.removeTagRegexp) match {
-      case (Some(p), _) =>
-        // prefix compiled to /^<escaped>\.?/ (:69-71): strips "p" and "p."
-        RegexpReplaceFirst(base, "^" + Pattern.quote(p) + "\\.?", "")
-      case (_, Some(re)) => RegexpReplaceFirst(base, Rule.normalizePattern(re), "")
-      case _             => base
+  private[graft] def groupCount(rule: Rule): Int =
+    try Pattern.compile(rule.normalizedPattern).matcher("").groupCount()
+    catch {
+      case e: PatternSyntaxException =>
+        throw new RuleConfigError(
+          s"rule pattern is not a valid Java regex: ${rule.pattern} (${e.getMessage})")
     }
-  }
-
-  /** Render one rule's tag template to a `concat(...)` of independent
-    * segments. Matches both reference gsub passes (:128 backrefs then :130
-    * placeholders); segment-independent evaluation deliberately does not
-    * reproduce Ruby's re-expansion of placeholder text arriving *inside* a
-    * captured value (sequential-gsub injection) — see SURVEY.md §2.4.1.
-    */
-  private def renderTemplate(
-      rule: Rule,
-      pat: String,
-      value: Column,
-      groupCount: Int,
-      stripped: Column,
-      cfg: RoutingConfig): Column = {
-    val segs = TemplateParser.parse(rule.tag)
-    val parts: Seq[Column] = segs.map {
-      case Lit(s) => lit(s)
-      case Backref(n) =>
-        if (rule.invert) lit("$" + n) // inverted rules keep $n literal (:122-124)
-        else if (n == 0 || n > groupCount) lit("") // absent key in gsub table → ""
-        else {
-          val c = regexp_extract(value, pat, n)
-          if (cfg.capitalizeRegexBackreference) capitalizeRuby(c) else c
-        }
-      case TagPh        => stripped
-      case TagPart(i)   =>
-        // split keeps trailing empties (limit -1) vs Ruby dropping them; the
-        // difference is unobservable because out-of-range reads are "" both
-        // ways. `get` is 0-based + null-safe (ANSI-proof), like tag_parts[i].
-        coalesce(get(split(stripped, "\\."), lit(i)), lit(""))
-      case HostnamePh   => lit(cfg.hostname)
-      case UnknownPh(_) => lit("") // unknown placeholder → "" + warn (:131-132)
-    }
-    parts match {
-      case Seq()  => lit("")
-      case Seq(c) => c
-      case many   => concat(many: _*)
-    }
-  }
-
-  /** Ruby `String#capitalize` (:150): upcase FIRST char, downcase the rest.
-    * NOT Spark `initcap` (which title-cases every whitespace-separated word:
-    * "foo bar" → initcap "Foo Bar" vs Ruby "Foo bar").
-    */
-  def capitalizeRuby(c: Column): Column =
-    concat(upper(substring(c, 1, 1)), lower(substring(c, 2, Int.MaxValue)))
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Validations — the reference's ConfigError surface (:53-67). */
-  private def validate(rules: Seq[Rule], cfg: RoutingConfig): Unit = {
+  private[graft] def validate(rules: Seq[Rule], cfg: RoutingConfig): Unit = {
     if (rules.isEmpty)
       throw new RuleConfigError("missing rewriterules") // :57-59
     // per-rule compile log — the reference's operator-debugging surface (:50)

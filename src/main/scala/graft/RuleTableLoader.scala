@@ -22,7 +22,7 @@ import org.apache.spark.sql.DataFrame
   *     because DataFrames have no row order.
   *
   * Loaders only PARSE; semantic validation (≥1 rule, duplicate rules,
-  * prefix∧regexp exclusion, template ranges) stays in RuleCompiler.compile —
+  * prefix∧regexp exclusion, template ranges) stays in RuleCompiler —
   * same split as the reference (config_param parse vs configure checks).
   *
   * `hostname_command` (:15-16,40): executed ONCE here on the driver, exactly

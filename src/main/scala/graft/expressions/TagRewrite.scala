@@ -29,15 +29,16 @@ final case class FusedRule(
 
 /** Driver-compiled, executor-executed rule table for [[TagRewriteExpr]].
   *
-  * Why this exists: the pure-Column compilation (RuleCompiler.compile)
-  * evaluates each rule's regex up to 1 + #backrefs times per row (`rlike`
-  * for the condition, then one `regexp_extract` per `$n`), and every one of
-  * those ops allocates a fresh `Matcher` + `String` + intermediate
-  * `UTF8String`s. Profiling on the 32-core sandbox showed that allocation —
-  * not CPU — caps N→4N scaling (raw regex with reused matchers scales at
-  * ~0.81 efficiency; the same work with per-call allocation measurably
-  * worse, and the Column plan on top of it reached only ~0.45). This table
-  * evaluates the WHOLE first-match-wins cascade in one pass per row:
+  * Why this exists: a pure built-in `CASE WHEN` compilation (kept as a
+  * test-side reference, `CaseWhenRouting`) evaluates each rule's regex up
+  * to 1 + #backrefs times per row (`rlike` for the condition, then one
+  * `regexp_extract` per `$n`), and every one of those ops allocates a fresh
+  * `Matcher` + `String` + intermediate `UTF8String`s. Profiling on the
+  * 32-core sandbox showed that allocation — not CPU — caps N→4N scaling
+  * (raw regex with reused matchers scales at ~0.81 efficiency; the same
+  * work with per-call allocation measurably worse, and the CaseWhen plan on
+  * top of it reached only ~0.45). This table evaluates the WHOLE
+  * first-match-wins cascade in one pass per row:
   * patterns compiled once per plan, matchers + StringBuilder reused
   * per-thread, each key value converted UTF8String→String at most once per
   * row, and the winning rule's template rendered directly from the live
@@ -77,12 +78,13 @@ final case class FusedRule(
   * distinct-row hit: counting those repeats would keep the cache on for
   * keys that never repeat across rows.
   *
-  * Semantics are byte-identical to the Column path (asserted by the
-  * differential spec): empty-value skip for normal rules
-  * (out_rewrite_tag_filter.rb:120), invert without backrefs (:122-124),
-  * absent/out-of-range `$n` → "" (:147-153), Ruby-capitalize (:150),
-  * `${tag}`/`${tag_parts[n]}`/`${hostname}` placeholders (:155-171), strip
-  * via first-match-only replace (Ruby `sub`, :156).
+  * Semantics are byte-identical to the test-side CaseWhen compilation and
+  * scalar interpreter (asserted by the differential spec): empty-value skip
+  * for normal rules (out_rewrite_tag_filter.rb:120), invert without
+  * backrefs (:122-124), absent/out-of-range `$n` → "" (:147-153),
+  * Ruby-capitalize (:150), `${tag}`/`${tag_parts[n]}`/`${hostname}`
+  * placeholders (:155-171), strip via first-match-only replace (Ruby `sub`,
+  * :156).
   *
   * The unchanged/unrouted DROP decision (:96-100) is fused in as well: the
   * output is `struct(tag, label)` with `tag = null` when the row must be
@@ -347,9 +349,9 @@ object CompiledRuleTable {
   *
   * children(0) = tag column (string), children(1..) = the distinct rule key
   * columns in [[CompiledRuleTable]] index order. Output:
-  * `struct<tag string, label string>`, null when no rule fires — plugs into
-  * [[graft.Router]] exactly like the CaseWhen plan from
-  * `RuleCompiler.compile`.
+  * `struct<tag string, label string>`: null when no rule fires,
+  * `tag = null` when the row is dropped — the contract [[graft.Router]]
+  * reads.
   *
   * `doGenCode` ships the compiled table as a plan reference object and emits
   * a single call into [[CompiledRuleTable.rewrite]], so the expression stays
@@ -405,13 +407,15 @@ object TagRewriteExpr {
 
   /** Ruby `tag.split('.')` for `${tag_parts[n]}` (:165-168). Keeps interior
     * empties; trailing-empty handling is unobservable (out-of-range reads
-    * are "" either way), matching the Column path's `split(tag, "\\.", -1)`.
+    * are "" either way), matching the CaseWhen reference's
+    * `split(tag, "\\.", -1)`.
     */
   def splitDots(s: String): Array[String] = s.split("\\.", -1)
 
   /** Ruby `String#capitalize` (:150): upcase the first code point, downcase
-    * the rest — identical to the Column path's upper(substring(c,1,1)) +
-    * lower(rest), whose substring counts code points, not UTF-16 units.
+    * the rest — identical to the CaseWhen reference's
+    * upper(substring(c,1,1)) + lower(rest), whose substring counts code
+    * points, not UTF-16 units.
     */
   def appendCapitalized(sb: java.lang.StringBuilder, s: String): Unit = {
     if (s.nonEmpty) {

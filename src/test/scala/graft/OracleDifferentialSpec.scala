@@ -6,10 +6,10 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Differential testing: the Catalyst-compiled engine must agree row-for-row
-  * with the ~30-line scalar [[Oracle]] interpreter (a direct transcription
-  * of out_rewrite_tag_filter.rb:117-137) on randomized rule tables, configs,
-  * records, and tags. Complements the golden suite: goldens pin the
+/** Differential testing: the fused engine and the [[CaseWhenRouting]]
+  * reference must agree row-for-row with the ~30-line scalar [[Oracle]]
+  * interpreter (a direct transcription of out_rewrite_tag_filter.rb:117-137)
+  * on randomized rule tables, configs, records, and tags. Complements the golden suite: goldens pin the
   * reference's exact examples, this pins the whole semantic surface.
   * Generators are driven with fixed seeds (deterministic, reproducible runs;
   * no scalatestplus bridge needed).
@@ -85,7 +85,7 @@ class OracleDifferentialSpec extends AnyFunSuite {
         r.getAs[Int]("rid") ->
           (r.getAs[String]("new_tag"), Option(r.getAs[String]("new_label")))
       }.toMap
-    val got = collectRouted(RuleCompiler.compile(rules, cfg, schema, "source"))
+    val got = collectRouted(CaseWhenRouting.compile(rules, cfg, schema, "source"))
     val gotFused =
       collectRouted(RuleCompiler.compileFused(rules, cfg, schema, "source"))
     val want = recs.zipWithIndex.flatMap { case ((vals, tag), i) =>
@@ -96,7 +96,7 @@ class OracleDifferentialSpec extends AnyFunSuite {
     assert(got == want,
       s"\n$ctx\nrules=$rules\ncfg=$cfg\nmismatch=${
         recs.zipWithIndex.filter(p => got.get(p._2) != want.get(p._2)).take(20)}")
-    // fused single-expression cascade ≡ Column cascade ≡ scalar oracle
+    // fused single-expression cascade ≡ CaseWhen reference ≡ scalar oracle
     assert(gotFused == want,
       s"\n[fused] $ctx\nrules=$rules\ncfg=$cfg\nmismatch=${
         recs.zipWithIndex.filter(p => gotFused.get(p._2) != want.get(p._2)).take(20)}")

@@ -327,7 +327,7 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(Oracle.route(rules, cfg, "input", Map("domain" -> value)) ==
       Some((want, None)))
     assert(routedMap(df, rules, cfg)(0)._1 == want) // fused
-    val column = Router.route(df, RuleCompiler.compile(rules, cfg, df.schema, "source"))
+    val column = Router.route(df, CaseWhenRouting.compile(rules, cfg, df.schema, "source"))
     assert(column.collect().map(_.getAs[String]("new_tag")).toSeq == Seq(want))
   }
 
@@ -359,7 +359,7 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(slashForm == Map(0 -> ("rewritten.simple", None)))
     // duplicate detection treats /re/ and re as the SAME compiled pattern
     intercept[RuleConfigError] {
-      RuleCompiler.compile(Seq(
+      RuleCompiler.compileFused(Seq(
         Rule("message", "/^x$/", "a"),
         Rule("message", "^x$", "b")),
         RoutingConfig(), df.schema, "source")
@@ -456,22 +456,32 @@ class RoutingGoldenSpec extends AnyFunSuite {
       Router.route(df, plan).collect()
         .map(r => r.getAs[Int]("rid") -> r.getAs[String]("new_tag")).toMap
     val fused = res(RuleCompiler.compileFused(rules, RoutingConfig(), schema, "source"))
-    val column = res(RuleCompiler.compile(rules, RoutingConfig(), schema, "source"))
+    val column = res(CaseWhenRouting.compile(rules, RoutingConfig(), schema, "source"))
     assert(fused == column)
     assert(fused == Map(0 -> "alert.", 2 -> "alert.web.api")) // null tag ≡ ""
   }
 
   // --- drop metrics (:96-99 trace) ----------------------------------------
   test("observe metrics: emitted / matched / unmatched") {
-    val rules = Seq(Rule("key", "^(odd)$", "$1"))
-    val df = frame(Seq("key"), "input", Seq(Seq("odd"), Seq("even"), Seq("odd")))
-    val obs = org.apache.spark.sql.Observation()
-    val plan = RuleCompiler.compile(rules, RoutingConfig(), df.schema, "source")
-    val n = Router.routeObserved(df, plan, obs).count()
-    assert(n == 2)
-    val m = obs.get
-    assert(m("emitted") == 3L)
-    assert(m("matched") == 2L)
-    assert(m("unmatched") == 1L)
+    val rules = Seq(
+      Rule("key", "^(odd)$", "$1"),
+      Rule("key", "^same$", "${tag}"), // fires, tag unchanged, no label: drop
+      Rule("key", "^relabel$", "${tag}", label = Some("lab"))) // kept by label
+    val df = frame(Seq("key"), "input",
+      Seq(Seq("odd"), Seq("even"), Seq("odd"), Seq("same"), Seq("relabel")))
+    def observed(plan: RuleCompiler.RoutingPlan) = {
+      val obs = org.apache.spark.sql.Observation()
+      val routed = Router.routeObserved(df, plan, obs).collect()
+        .map(r => r.getAs[Int]("rid") ->
+          (r.getAs[String]("new_tag"), Option(r.getAs[String]("new_label")))).toMap
+      val m = obs.get
+      (routed, Seq("emitted", "matched", "unmatched").map(m))
+    }
+    val fused = observed(RuleCompiler.compileFused(rules, RoutingConfig(), df.schema, "source"))
+    val column = observed(CaseWhenRouting.compile(rules, RoutingConfig(), df.schema, "source"))
+    assert(fused._1 == Map(0 -> ("odd", None), 2 -> ("odd", None),
+      4 -> ("input", Some("lab"))))
+    assert(fused._2 == Seq(5L, 4L, 2L)) // emitted, matched (fired), unmatched (dropped)
+    assert(column == fused)
   }
 }

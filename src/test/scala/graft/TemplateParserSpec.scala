@@ -68,34 +68,34 @@ class RuleCompilerValidationSpec extends AnyFunSuite {
 
   test("C-NONEMPTY: empty rule set rejected (:57-59)") {
     intercept[RuleConfigError](
-      RuleCompiler.compile(Nil, RoutingConfig(), new org.apache.spark.sql.types.StructType))
+      RuleCompiler.compileFused(Nil, RoutingConfig(), new org.apache.spark.sql.types.StructType))
   }
 
   test("C-DUP: duplicate (key, invert, pattern) rejected, tag/label ignored (:61-63)") {
     val schema = new org.apache.spark.sql.types.StructType().add("k", "string")
-    intercept[RuleConfigError](RuleCompiler.compile(
+    intercept[RuleConfigError](RuleCompiler.compileFused(
       Seq(Rule("k", "p", "t1"), Rule("k", "p", "t2")), RoutingConfig(), schema))
     // same key+pattern but different invert is NOT a duplicate
-    RuleCompiler.compile(
+    RuleCompiler.compileFused(
       Seq(Rule("k", "p", "t1"), Rule("k", "p", "t2", invert = true)),
       RoutingConfig(), schema)
   }
 
   test("C-EXCL: remove_tag_prefix and remove_tag_regexp exclusive (:65-67)") {
     val schema = new org.apache.spark.sql.types.StructType().add("k", "string")
-    intercept[RuleConfigError](RuleCompiler.compile(Seq(ok), RoutingConfig(
+    intercept[RuleConfigError](RuleCompiler.compileFused(Seq(ok), RoutingConfig(
       removeTagPrefix = Some("input"), removeTagRegexp = Some("^input\\.")), schema))
   }
 
   test("C-RANGE via template (:43-45)") {
     val schema = new org.apache.spark.sql.types.StructType().add("k", "string")
-    intercept[RuleConfigError](RuleCompiler.compile(
+    intercept[RuleConfigError](RuleCompiler.compileFused(
       Seq(Rule("k", ".+", "x.${tag_parts[0..2]}")), RoutingConfig(), schema))
   }
 
   test("invalid Java regex gets a compile-time error, not a task failure") {
     val schema = new org.apache.spark.sql.types.StructType().add("k", "string")
-    intercept[RuleConfigError](RuleCompiler.compile(
+    intercept[RuleConfigError](RuleCompiler.compileFused(
       Seq(Rule("k", "([unclosed", "t")), RoutingConfig(), schema))
   }
 
